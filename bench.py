@@ -91,7 +91,7 @@ def bench_replay_throughput(spark, n_events: int) -> tuple[float, int]:
             spark, n_events=100_000, n_convs=1000, seed=7,
             batch_size=50_000,
         )
-        replay_batches(warm_events, warm, None, "warmup", salt_buckets=64)
+        replay_batches(warm_events, warm, None, "warmup")
         table = LakeTable.create(
             spark,
             os.path.join(tmp, "transcripts"),
@@ -100,7 +100,7 @@ def bench_replay_throughput(spark, n_events: int) -> tuple[float, int]:
             bucket_count=64,
         )
         t0 = time.perf_counter()
-        replay_batches(events, table, None, "bench-run", salt_buckets=64)
+        replay_batches(events, table, None, "bench-run")
         dt = time.perf_counter() - t0
         return dt, n_delivered
     finally:

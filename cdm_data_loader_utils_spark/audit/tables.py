@@ -17,8 +17,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..lake.table import LakeTable
+from ..lake.table import LakeTable, local_frame
 from ..schemas import (
     INGEST_LOG_SCHEMA,
     REJECTS_SCHEMA,
@@ -83,15 +84,10 @@ class AuditStore:
             )
         # typed schema, not just names: a fully-rejected batch has every
         # metric column None and name-only inference cannot type it
-        from pyspark.sql import types as T
-
         log_schema = T.StructType(
             [f for f in INGEST_LOG_SCHEMA.fields if f.name != "updated"]
         )
-        df = self.spark.createDataFrame(
-            [tuple(r.get(f.name) for f in log_schema.fields) for r in rows],
-            schema=log_schema,
-        ).withColumn("updated", now)
+        df = local_frame(self.spark, rows, log_schema).withColumn("updated", now)
         # fenced like the data merge: a re-delivered batch (concurrent
         # second driver, resume=False rerun) must not append duplicate
         # lineage rows that double run_metrics' sums. Status transitions
@@ -126,13 +122,11 @@ class AuditStore:
         # (finish transitions match on status=RUNNING and would rewrite both)
         if self.run_status(run_id) == RUN_STATUS_RUNNING:
             return
-        from pyspark.sql import types as T
-
         base = T.StructType(
             [f for f in RUNS_SCHEMA.fields if f.name in ("run_id", "status", "error")]
         )
-        df = self.spark.createDataFrame(
-            [(run_id, RUN_STATUS_RUNNING, None)], schema=base
+        df = local_frame(
+            self.spark, [{"run_id": run_id, "status": RUN_STATUS_RUNNING}], base
         ).select(
             "run_id", "status", "error",
             F.current_timestamp().alias("started"),

@@ -47,9 +47,11 @@ import uuid
 from dataclasses import dataclass, replace as _dc_replace
 from urllib.parse import unquote, urlparse
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .fs import (
     LocalFilesystem,
@@ -909,7 +911,7 @@ class LakeTable:
             for p in parts[1:]:
                 out = out.unionByName(p)
         else:
-            out = self.spark.createDataFrame([], cur)
+            out = local_frame(self.spark, [], cur)
         if where:
             out = out.filter(_where_to_column(
                 where, {f.name: f.dataType for f in cur.fields}
@@ -1916,7 +1918,7 @@ class LakeTable:
 
         def live(snap, entries):
             if not entries:
-                return self.spark.createDataFrame([], user_schema)
+                return local_frame(self.spark, [], user_schema)
             df = self._read_files(snap, entries, with_file_col=False)
             if META_DELETED in df.columns:
                 df = df.filter(~F.coalesce(F.col(META_DELETED), F.lit(False)))
@@ -2880,6 +2882,24 @@ def write_table(
     else:
         t.append(df, fence_key=fence_key)
     return t
+
+
+def local_frame(spark: SparkSession, rows: list[dict],
+                schema: T.StructType) -> DataFrame:
+    """Driver-held ``rows`` (dicts by field name; a missing key is null) as
+    an Arrow-backed local relation of ``schema``.
+
+    ``createDataFrame(<list>)`` parallelizes through a Python RDD, so even
+    an empty frame runs a job of Python-worker tasks once collected. An
+    Arrow table is planned as a ``LocalRelation`` instead: collecting it
+    runs no job, nor do filters, sorts and limits over an empty one. The
+    frame has one partition, so an append of it writes one file; a local
+    scan otherwise splits into min(rows, cores) partitions."""
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    df = spark.createDataFrame(table, schema=schema)
+    # ≤ 1 row is one partition already; a Coalesce node at the root would
+    # keep an empty relation from being answered on the driver
+    return df.coalesce(1) if len(rows) > 1 else df
 
 
 def _align_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:

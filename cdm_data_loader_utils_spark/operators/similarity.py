@@ -86,14 +86,15 @@ def cosine_pairs(
     b = withn.select(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), F.col("__n").alias("nb")
     )
+    # the threshold applies to the raw cosine; only the emitted score is
+    # rounded (a raw 0.3999996 rounds to 0.4 but is below t = 0.4)
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn(
-            "cosine",
-            F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6),
+            "__raw", dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
         )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+        .filter(F.col("__raw") >= threshold)
+        .select("id_a", "id_b", F.round(F.col("__raw"), 6).alias("cosine"))
     )
 
 
@@ -215,13 +216,11 @@ def cosine_pairs_blocked(
 
     _round6 = round6_half_up
 
-    # candidate guard band on the UNROUNDED matmul score: it must cover the
-    # full 6dp rounding quantum (1e-6) — a pair whose exact HALF_UP-rounded
-    # score lands on the threshold can sit up to half a quantum BELOW it
-    # unrounded, and numpy's binary rounding may bin it differently — plus
-    # the ~1e-13 accumulation-order error. Everything inside the band is
-    # decided by the exact sequential rescore below.
-    guard = 1.1e-6
+    # candidate guard band on the matmul score: it covers the ~1e-13 gap
+    # between numpy's pairwise accumulation and the sequential fold, with a
+    # wide margin. Everything inside the band is decided by the exact
+    # sequential rescore below.
+    guard = 1e-9
 
     def _matmul(batches):
         for pdf in batches:
@@ -252,12 +251,15 @@ def cosine_pairs_blocked(
                 prods = va[ii] * vb[jj]
                 seq_dots = np.add.accumulate(prods, axis=1)[:, -1]
                 exact = seq_dots / (na[ii] * nb[jj])
-                scores = np.fromiter(
-                    (_round6(v) for v in exact), dtype=np.float64, count=len(exact)
-                )
-                keep = scores >= threshold
+                # inclusion on the raw cosine, like cosine_pairs and the
+                # oracle; only the emitted score is rounded
+                keep = exact >= threshold
                 if not keep.any():
                     continue
+                scores = np.fromiter(
+                    (_round6(v) for v in exact[keep]), dtype=np.float64,
+                    count=int(keep.sum()),
+                )
                 xa, xb = ia[ii[keep]], ib[jj[keep]]
                 swap = xa > xb
                 xa, xb = np.where(swap, xb, xa), np.where(swap, xa, xb)
@@ -267,7 +269,7 @@ def cosine_pairs_blocked(
                         {
                             "id_a": pd.Series(xa, dtype=pd_id),
                             "id_b": pd.Series(xb, dtype=pd_id),
-                            "cosine": pd.Series(scores[keep], dtype="float64"),
+                            "cosine": pd.Series(scores, dtype="float64"),
                         }
                     )
                 )

@@ -119,7 +119,7 @@ def q_cdc_replay_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, os.path.join(tmp, "transcripts"), schema,
         bucket_by="conv_id", bucket_count=8,
     )
-    replay_batches(ch, table, None, "entry-run", salt_buckets=8)
+    replay_batches(ch, table, None, "entry-run")
     return (
         table.read()
         .select("conv_id", "turn_idx", "text", F.unix_micros("ts").alias("ts_us"))
@@ -1141,8 +1141,8 @@ _EMBEDDING_CLUSTERS_ORACLE = """
 WITH RECURSIVE p AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-  WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                     CAST(b.embedding AS DOUBLE[])), 6) >= 0.4
+  WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                               CAST(b.embedding AS DOUBLE[])) >= 0.4
 ),
 edges AS (
   SELECT id_a AS src, id_b AS dst FROM p

@@ -6,7 +6,7 @@ refseq_pipeline/cli/refseq_update_manager.py:58-235`` — fetch → snapshot →
 diff → resolve → re-ingest → cleanup) into one idempotent micro-batch body
 (SURVEY §3.1):
 
-    fence-check → validate/reject → salted LWW dedup → schema-reconcile →
+    fence-check → validate/reject → LWW dedup → schema-reconcile →
     MERGE → ingest_log (checkpoint + metrics + per-partition lineage)
 
 Two drivers share that body:
@@ -156,16 +156,10 @@ def apply_batch(
     audit: AuditStore | None,
     run_id: str,
     batch_id: int,
-    salt_buckets: int = 32,
     prepared: _PreparedBatch | None = None,
 ) -> BatchResult:
     """Apply one micro-batch idempotently. Safe to call twice with the same
     (run_id, batch_id): the second call is fenced out by the snapshot log.
-
-    ``salt_buckets`` is kept for API stability but unused by the default
-    dedup: :func:`lww_dedup_agg`'s map-side partial aggregation already
-    neutralizes hot keys, so no explicit salting pass is needed (swap in
-    ``lww_dedup_salted`` here to compare strategies).
 
     ``prepared`` (optional) is a :class:`_PreparedBatch` for THESE events a
     pipelined driver computed ahead of time; ownership transfers here (its
@@ -245,7 +239,6 @@ def replay_batches(
     run_id: str,
     drop_tool_below_batch: int | None = None,
     resume: bool = True,
-    salt_buckets: int = 32,
 ) -> list[BatchResult]:
     """Replay a static change-event DataFrame batch-by-batch (its ``batch_id``
     column defines micro-batch assignment, possibly out of LSN order).
@@ -312,7 +305,7 @@ def replay_batches(
             results.append(
                 apply_batch(
                     batch_frame(bid), table, audit, run_id, bid,
-                    salt_buckets, prepared=prep,
+                    prepared=prep,
                 )
             )
     except Exception as e:
@@ -370,7 +363,6 @@ def stream_events(
     run_id: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 4,
-    salt_buckets: int = 32,
     trigger: str | None = None,
     timeout_sec: float | None = None,
 ):
@@ -400,7 +392,7 @@ def stream_events(
     )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        apply_batch(batch_df, table, audit, run_id, int(batch_id), salt_buckets)
+        apply_batch(batch_df, table, audit, run_id, int(batch_id))
 
     writer = (
         stream.writeStream.foreachBatch(_sink)
@@ -445,7 +437,6 @@ def tail_lake_events(
     run_id: str,
     checkpoint_dir: str,
     max_snapshots_per_trigger: int = 4,
-    salt_buckets: int = 32,
     trigger: str | None = None,
     timeout_sec: float | None = None,
 ):
@@ -490,8 +481,7 @@ def tail_lake_events(
         )
 
         def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            apply_batch(batch_df, table, audit, run_id, int(batch_id),
-                        salt_buckets)
+            apply_batch(batch_df, table, audit, run_id, int(batch_id))
 
         return (
             stream.writeStream.foreachBatch(_sink)

@@ -6,6 +6,7 @@ compaction/expiry."""
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -35,6 +36,17 @@ def test_create_and_read_empty(spark, warehouse):
     assert t.read().count() == 0
     assert [f.name for f in t.read().schema.fields] == ["k", "v"]
     assert t.snapshot_id == 1
+    # an empty table reads as a local relation, answered on the driver: no
+    # Spark job (a Python-RDD frame would run one task per core)
+    sc = spark.sparkContext
+    group = f"read-empty-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read of an empty table")
+    try:
+        assert t.read().collect() == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_append_and_read(spark, warehouse):

@@ -3,6 +3,7 @@ analysis, multimodal plumbing, DSV reader, scalar functions."""
 
 from __future__ import annotations
 
+import math
 import os
 
 import pytest
@@ -297,23 +298,50 @@ def test_lww_variants_agree(spark):
     assert len(a) == ev.select(*keys).distinct().count()
 
 
+def _raw_cosine(a, b):
+    """The engine's cosine: float32 inputs widened to float64, sequential
+    left-to-right sums."""
+    import numpy as np
+
+    a, b = np.float32(a).astype(np.float64), np.float32(b).astype(np.float64)
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot, na, nb = dot + x * y, na + x * x, nb + y * y
+    return dot / (math.sqrt(na) * math.sqrt(nb))
+
+
 def test_cosine_pairs_blocked_matches_exact(spark):
     """Chunked matmul path finds the same pairs AND 6dp scores as the exact
-    self-join (scores too, since it's oracle-checked against the same SQL)."""
+    self-join (scores too, since it's oracle-checked against the same SQL).
+    Both keep a pair on its RAW cosine: one whose 6dp score rounds up to the
+    threshold from below is dropped."""
     from cdm_data_loader_utils_spark.operators.similarity import (
         cosine_pairs,
         cosine_pairs_blocked,
     )
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact = {
-        (r.id_a, r.id_b, r.cosine) for r in cosine_pairs(e, threshold=0.4).collect()
-    }
-    blocked = {
-        (r.id_a, r.id_b, r.cosine)
-        for r in cosine_pairs_blocked(e, threshold=0.4, chunk_size=64).collect()
-    }
-    assert exact == blocked and len(exact) > 0
+    # 1-2 sits just below t = 0.4 but rounds to 0.4; 1-3 sits just above
+    vecs = {1: [1.0, 0.0]}
+    for vid, c in ((2, 0.39999975), (3, 0.40000025)):
+        vecs[vid] = [c, math.sqrt(1.0 - c * c)]
+    assert 0.3999995 <= _raw_cosine(vecs[1], vecs[2]) < 0.4
+    assert _raw_cosine(vecs[1], vecs[3]) >= 0.4
+    band = spark.createDataFrame(
+        sorted(vecs.items()), "vec_id long, embedding array<float>"
+    )
+    for df in (e, band):
+        exact = {
+            (r.id_a, r.id_b, r.cosine)
+            for r in cosine_pairs(df, threshold=0.4).collect()
+        }
+        blocked = {
+            (r.id_a, r.id_b, r.cosine)
+            for r in cosine_pairs_blocked(df, threshold=0.4, chunk_size=64).collect()
+        }
+        assert exact == blocked and len(exact) > 0
+    assert {(a, b) for a, b, _ in exact} == {(1, 3), (2, 3)}
+    assert (1, 3, 0.4) in exact
 
 
 def test_cosine_pairs_blocked_rows_stay_bounded(spark):

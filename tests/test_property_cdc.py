@@ -99,7 +99,7 @@ def test_replay_equals_fold(spark, tmp_path_factory, events):
         spark, os.path.join(str(wh), f"t{uuid.uuid4().hex[:6]}"), schema,
         bucket_by="conv_id", bucket_count=2,
     )
-    replay_batches(df, table, None, "prop-run", salt_buckets=2)
+    replay_batches(df, table, None, "prop-run")
     got = {
         (r.conv_id, r.turn_idx, r.text, r.lsn)
         for r in table.read(include_meta=True)

@@ -93,6 +93,10 @@ def test_full_replay_equals_oracle(spark, warehouse):
     assert m["rows_read"] == events.count()
     assert m["error_batches"] == 0
     assert audit.lineage_report(run_id).count() > 0
+    # one data file per audit commit: one per logged batch (its total row
+    # plus per-bucket lineage rows), one for the run's state row
+    assert len(audit.ingest_log.files()) == len(results)
+    assert len(audit.runs.files()) == 1
 
 
 def test_replay_is_parallelism_invariant_batching(spark, warehouse):

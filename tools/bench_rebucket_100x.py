@@ -67,7 +67,7 @@ def replay_wave(spark, path: str, table: LakeTable, run_id: str) -> dict:
     n = events.count()
     before = {f.path for f in table.files()}
     t0 = time.perf_counter()
-    replay_batches(events, table, None, run_id, salt_buckets=64)
+    replay_batches(events, table, None, run_id)
     dt = time.perf_counter() - t0
     # exact copy-on-write rewrite volume: rows in files this wave created
     # (merged output INCLUDING carried-forward copies of untouched rows —
