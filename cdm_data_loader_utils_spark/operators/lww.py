@@ -56,8 +56,8 @@ def lww_dedup_agg(
     candidate row per (key, input-partition) crosses the wire. This makes
     hot-conversation skew a non-event for dedup — the reduce side sees at
     most ``num_input_partitions`` rows per key — which is why the replay
-    path defaults to this form and keeps the salted window only as an
-    explicit alternative."""
+    path uses this form; the window form stays as an independent oracle
+    (``sources.events.expected_final_state``)."""
     order = list(order_cols) + ([extra_tiebreak] if extra_tiebreak else [])
     payload = F.struct(*[F.col(c) for c in df.columns])
     ord_struct = F.struct(*[F.col(c) for c in order])
@@ -67,32 +67,3 @@ def lww_dedup_agg(
         .select("__r.*")
     )
 
-
-def lww_dedup_salted(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str] = ("lsn", "ts"),
-    salt_buckets: int = 32,
-    extra_tiebreak: str | None = "op",
-) -> DataFrame:
-    """Two-phase LWW for hot keys: local max-per-(key, salt) then global.
-
-    A handful of hot ``conv_id``s owning ~30% of a batch turn the single
-    window sort into one straggler task. Phase 1 reduces each (key, salt)
-    group to one row — a deterministic salt derived from the order columns
-    spreads a hot key over ``salt_buckets`` tasks; phase 2 runs the exact
-    window on the tiny residue. No reference counterpart (the reference has
-    no skew handling); required by the north rule.
-
-    The salt is ``xxhash64(order_cols) % salt_buckets`` — content-derived,
-    not ``rand()``, so replays are deterministic.
-    """
-    salt = (F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(salt_buckets))).cast("int")
-    local = lww_dedup(
-        df.withColumn("__salt", salt),
-        key_cols=list(key_cols) + ["__salt"],
-        order_cols=order_cols,
-        extra_tiebreak=extra_tiebreak,
-    ).drop("__salt")
-    return lww_dedup(local, key_cols=key_cols, order_cols=order_cols,
-                     extra_tiebreak=extra_tiebreak)

@@ -608,15 +608,13 @@ def test_append_conflict_with_concurrent_rebucket_rewrites(spark, warehouse, mon
     assert {r.v for r in t.read().filter(F.col("k") == "x").collect()} == {999}
 
 
-def test_merge_decision_path_row_identical_to_join_path(spark, warehouse):
-    """r7: the broadcast decision-path merge (taken when ``incoming_rows``
-    is small) must be ROW-identical to the full-outer-join formulation on
-    every edge the join semantics cover: update/insert/delete, lsn ties
-    (target wins), late lower-lsn events, duplicate target keys introduced
-    by append (each beaten copy is replaced by one source-payload row),
-    NULL source lsn (matched → target kept; unmatched → key + NULL
-    payload), NULL source keys (pass through, never match), and live
-    schema evolution."""
+def test_merge_cdc_physical_rows_cover_every_lww_edge(spark, warehouse):
+    """Every physical row a CDC merge leaves behind, meta columns and
+    tombstones included: update, insert, delete tombstone, lsn tie (target
+    wins), late lower lsn (loses), duplicate target keys from ``append``
+    (each beaten copy is replaced by one source-payload row), NULL source
+    lsn (matched → target kept; unmatched → key + NULL payload), NULL source
+    key (passes through, never matches) and live schema evolution."""
     src_schema = T.StructType(
         [
             T.StructField("k", T.StringType()),
@@ -634,71 +632,67 @@ def test_merge_decision_path_row_identical_to_join_path(spark, warehouse):
             T.StructField("lsn", T.LongType()),
         ]
     )
+    t = LakeTable.create(
+        spark, os.path.join(warehouse, "t"), SCHEMA,
+        bucket_by="k", bucket_count=4,
+    )
+    t.merge_cdc(
+        spark.createDataFrame(
+            [("a", 1, "i", 10), ("b", 2, "i", 11), ("c", 3, "i", 12),
+             ("tie", 4, "i", 40), ("nullsrc", 5, "i", 50)],
+            src_schema,
+        ),
+        key_cols=["k"],
+        incoming_rows=5,
+    )
+    # DUPLICATE target keys: append bypasses merge's one-row-per-key rule
+    t.append(_df(spark, [("dup", 7), ("dup", 8), ("dup", 9)]))
+    wave = [
+        ("a", 100, "u", 20),          # plain update
+        ("b", 0, "d", 21),            # delete → tombstone
+        ("c", 999, "u", 5),           # late lower-lsn: must lose
+        ("tie", 444, "u", 40),        # lsn tie: target wins
+        ("dup", 77, "u", 60),         # beats all three dup copies
+        ("new1", 11, "i", 61),        # brand-new key
+        ("nullsrc", 55, "u", None),   # matched, NULL lsn: target kept
+        ("newnull", 66, "i", None),   # unmatched, NULL lsn: key + NULLs
+        (None, 99, "i", 62),          # NULL key: passes through
+    ]
+    # no row-count hint: the existence probe runs as a shuffled semi-join
+    t.merge_cdc(spark.createDataFrame(wave, src_schema), key_cols=["k"])
+    # live schema evolution; a batch this dense skips the probe
+    t.merge_cdc(
+        spark.createDataFrame(
+            [("a", 1000, "x", "u", 70), ("new2", 12, "y", "i", 71)],
+            wide_schema,
+        ),
+        key_cols=["k"],
+        incoming_rows=2,
+    )
 
-    def build(name, incoming_rows_of):
-        t = LakeTable.create(
-            spark, os.path.join(warehouse, name), SCHEMA,
-            bucket_by="k", bucket_count=4,
-        )
-        # seed state incl. DUPLICATE target keys for "dup" (append bypasses
-        # merge's one-row-per-key invariant on purpose)
-        t.merge_cdc(
-            spark.createDataFrame(
-                [("a", 1, "i", 10), ("b", 2, "i", 11), ("c", 3, "i", 12),
-                 ("tie", 4, "i", 40), ("nullsrc", 5, "i", 50)],
-                src_schema,
-            ),
-            key_cols=["k"],
-            incoming_rows=incoming_rows_of(5),
-        )
-        t.append(_df(spark, [("dup", 7), ("dup", 8), ("dup", 9)]))
-        wave = [
-            ("a", 100, "u", 20),          # plain update
-            ("b", 0, "d", 21),            # delete → tombstone
-            ("c", 999, "u", 5),           # late lower-lsn: must lose
-            ("tie", 444, "u", 40),        # lsn tie: target wins
-            ("dup", 77, "u", 60),         # beats all three dup copies
-            ("new1", 11, "i", 61),        # brand-new key
-            ("nullsrc", 55, "u", None),   # matched, NULL lsn: target kept
-            ("newnull", 66, "i", None),   # unmatched, NULL lsn: ghost row
-            (None, 99, "i", 62),          # NULL key: passes through
-        ]
-        t.merge_cdc(
-            spark.createDataFrame(wave, src_schema),
-            key_cols=["k"],
-            incoming_rows=incoming_rows_of(len(wave)),
-        )
-        # live schema evolution through each path too
-        t.merge_cdc(
-            spark.createDataFrame(
-                [("a", 1000, "x", "u", 70), ("new2", 12, "y", "i", 71)],
-                wide_schema,
-            ),
-            key_cols=["k"],
-            incoming_rows=incoming_rows_of(2),
-        )
-        return t
-
-    # incoming_rows is a routing/sizing HINT, not validated against the
-    # actual count — pin it above DECISION_MERGE_MIN_ROWS to force the
-    # decision path on these tiny fixtures (None forces the join path)
-    from cdm_data_loader_utils_spark.lake.table import DECISION_MERGE_MIN_ROWS
-
-    t_dec = build("dec", lambda n: DECISION_MERGE_MIN_ROWS)
-    t_join = build("join", lambda n: None)
-
-    def full_state(t):
-        # read ALL rows incl. tombstones and meta cols — the strongest
-        # equality (physical row content, not just visible state)
-        snap = t.snapshot()
-        entries = [
-            fe for k in sorted(t._require_v2(snap))
-            for fe in t._read_manifest(t._require_v2(snap)[k])
-        ]
-        df = t._read_files(snap, entries, with_file_col=False)
-        return sorted(
-            tuple("∅" if v is None else str(v) for v in row)
-            for row in df.collect()
-        )
-
-    assert full_state(t_dec) == full_state(t_join)
+    # read ALL rows incl. tombstones and meta cols: the physical content,
+    # not just the visible state
+    snap = t.snapshot()
+    manifests = t._require_v2(snap)
+    entries = [fe for k in sorted(manifests)
+               for fe in t._read_manifest(manifests[k])]
+    df = t._read_files(snap, entries, with_file_col=False)
+    assert df.columns == ["k", "v", "extra", "__lsn", "__deleted"]
+    got = sorted(df.collect(), key=lambda r: tuple(map(repr, r)))
+    assert [tuple(r) for r in got] == sorted(
+        [
+            ("a", 1000, "x", 70, False),
+            ("b", 0, None, 21, True),
+            ("c", 3, None, 12, False),
+            ("dup", 77, None, 60, False),
+            ("dup", 77, None, 60, False),
+            ("dup", 77, None, 60, False),
+            ("new1", 11, None, 61, False),
+            ("new2", 12, "y", 71, False),
+            ("newnull", None, None, None, None),
+            ("nullsrc", 5, None, 50, False),
+            ("tie", 4, None, 40, False),
+            (None, 99, None, 62, False),
+        ],
+        key=lambda r: tuple(map(repr, r)),
+    )

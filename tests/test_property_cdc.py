@@ -12,7 +12,7 @@ import os
 import uuid
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -153,7 +153,10 @@ def table_op_sequences(draw):
     merge-tombstone / physical predicate-delete / LSN-fenced tombstone
     delete / targeted-update / compact against a fresh table. Upsert and
     tombstone-delete LSNs are drawn from overlapping windows so LWW
-    decisions go BOTH ways against standing tombstones."""
+    decisions go BOTH ways against standing tombstones. Each merge also
+    draws its row-count hint: the exact count 1 (a batch this dense skips
+    the existence probe) or none (the probe runs as a shuffled
+    semi-join), so both merge routes are exercised."""
     ops = []
     n = draw(st.integers(min_value=3, max_value=9))
     next_key = 0
@@ -176,7 +179,8 @@ def table_op_sequences(draw):
             # LOWER lsn than a standing tombstone and must lose
             ops.append((kind, draw(st.integers(0, next_key - 1)),
                         draw(st.integers(0, 99)),
-                        draw(st.integers(step * 4 + 1, step * 4 + 12))))
+                        draw(st.integers(step * 4 + 1, step * 4 + 12)),
+                        draw(st.sampled_from([1, None]))))
             merged = True
         elif kind == "delete":
             ops.append(("delete", draw(st.integers(0, 99))))
@@ -197,6 +201,12 @@ def table_op_sequences(draw):
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
 )
 @given(table_op_sequences())
+# pinned so both probe routes run on every pass, whatever the draws: each
+# hint (None, then 1) merges into keys that exist, incl. a tombstone that a
+# later lower-lsn upsert must not resurrect
+@example([("append", [(0, 10), (1, 20), (2, 30)]),
+          ("upsert", 0, 11, 5, None), ("tomb", 1, 0, 6, 1),
+          ("upsert", 1, 21, 4, None), ("upsert", 2, 31, 7, 1)])
 def test_row_ops_equal_python_model(spark, tmp_path_factory, ops):
     """For ANY interleaving of appends, CDC merges (upsert + tombstone,
     RANDOM overlapping LSNs), physical predicate DELETEs, LSN-fenced
@@ -232,13 +242,13 @@ def test_row_ops_equal_python_model(spark, tmp_path_factory, ops):
             t.append(spark.createDataFrame(rows, schema))
             live.update({k: (v, None) for k, v in rows})  # fresh keys only
         elif op[0] in ("upsert", "tomb"):
-            _, key, val, lsn = op
+            _, key, val, lsn, hint = op
             kind = "i" if op[0] == "upsert" else "d"
             t.merge_cdc(
                 spark.createDataFrame(
                     [(key, None if kind == "d" else val, kind, lsn)],
                     src_schema),
-                key_cols=["k"])
+                key_cols=["k"], incoming_rows=hint)
             standing = (
                 live[key][1] if key in live
                 else tomb.get(key)  # None → unmatched → source inserts
